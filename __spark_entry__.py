@@ -9806,60 +9806,35 @@ _ORACLES["wat_link_graph"] = WAT_LINK_SQL
 # a new gate or when a new CORRECTNESS_r*.json lands.
 _FUNCS: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # --- driver window (never-green gates first, then stalest
-    # greens by (round, name); latest recorded round: r13) ---
-    "dedup_ngram_jaccard": dedup_ngram_jaccard,
-    "dedup_simhash": dedup_simhash,
-    "dedup_source_matrix": dedup_source_matrix,
-    "doc_fingerprint": doc_fingerprint,
-    "embedding_cosine_topk": embedding_cosine_topk,
-    "embedding_covariance": embedding_covariance,
-    "embedding_near_dup": embedding_near_dup,
-    "embedding_quantize_profile": embedding_quantize_profile,
-    "event_sessionization": event_sessionization,
-    "fineweb_quality": fineweb_quality,
-    "j1_region_revenue": j1_region_revenue,
-    "j2_customers_without_recent_orders": j2_customers_without_recent_orders,
-    "j3_filtered_left_join": j3_filtered_left_join,
-    "j5_order_lines_json": j5_order_lines_json,
-    "j6_watermark_antijoin_dedup": j6_watermark_antijoin_dedup,
-    "json_props_extract": json_props_extract,
-    "media_info_mp4": media_info_mp4,
-    "media_info_web": media_info_web,
-    "multimodal_audio_quality": multimodal_audio_quality,
-    "multimodal_audiofp_fingerprint": multimodal_audiofp_fingerprint,
-    "multimodal_ccitt_fax": multimodal_ccitt_fax,
-    "multimodal_dhash_fingerprint": multimodal_dhash_fingerprint,
-    "multimodal_jpeg_12bit": multimodal_jpeg_12bit,
-    "multimodal_metadata": multimodal_metadata,
-    "ngram_containment": ngram_containment,
-    "pdf_extract_text": pdf_extract_text,
-    "pdf_scanned_images": pdf_scanned_images,
-    "zorder_cluster_stats": zorder_cluster_stats,
-    "asof_last_purchase": asof_last_purchase,
-    "bloom_prefilter_verdicts": bloom_prefilter_verdicts,
-    "boilerplate_line_removal": boilerplate_line_removal,
-    "bpe_byte_level": bpe_byte_level,
-    "bpe_merge_candidates": bpe_merge_candidates,
-    "bpe_packed_export": bpe_packed_export,
-    "bpe_segment_fixed": bpe_segment_fixed,
-    "ccnet_perplexity": ccnet_perplexity,
-    "chain_state_fold": chain_state_fold,
-    "chunk_dedup_spans": chunk_dedup_spans,
-    "contamination_ngram": contamination_ngram,
-    "corpus_version_diff": corpus_version_diff,
-    "crawl_frontier_batch": crawl_frontier_batch,
-    "domain_cap_topn": domain_cap_topn,
-    "dsir_selection": dsir_selection,
-    "dup_window_spans": dup_window_spans,
-    "edit_distance_pairs": edit_distance_pairs,
-    "funnel_view_click_purchase": funnel_view_click_purchase,
-    "global_shard_ids": global_shard_ids,
-    "gopher_quality": gopher_quality,
-    "gopher_repetition": gopher_repetition,
-    "hard_negative_mining": hard_negative_mining,
-    # ---------------------------------------------------------------
-    # Parked behind the 50-slot window: first the ROTATION_DEFERRED
-    # overflow (rotates into the next window), then the fresh greens.
+    # greens by (round, name); latest recorded round: r14) ---
+    "html_numeric_refs": html_numeric_refs,
+    "jsonl_roundtrip_ingest": jsonl_roundtrip_ingest,
+    "label_centroid_stats": label_centroid_stats,
+    "media_info_webm": media_info_webm,
+    "minhash_index_compact": minhash_index_compact,
+    "multimodal_adpcm_audio": multimodal_adpcm_audio,
+    "multimodal_avi_frames": multimodal_avi_frames,
+    "multimodal_featurize_ann": multimodal_featurize_ann,
+    "multimodal_frame_sample": multimodal_frame_sample,
+    "multimodal_g711_audio": multimodal_g711_audio,
+    "multimodal_image_quality": multimodal_image_quality,
+    "multimodal_jpeg_fingerprint": multimodal_jpeg_fingerprint,
+    "multimodal_mjpeg_frames": multimodal_mjpeg_frames,
+    "o1_ordered_chain_page": o1_ordered_chain_page,
+    "o3_top1_scalar": o3_top1_scalar,
+    "o4_first_event_after": o4_first_event_after,
+    "o5_top2_desc": o5_top2_desc,
+    "p3_decimal_lsn_range": p3_decimal_lsn_range,
+    "p4_watermark_overlap_window": p4_watermark_overlap_window,
+    "pdf_tounicode_text": pdf_tounicode_text,
+    "robots_url_governance": robots_url_governance,
+    "sample_global_k": sample_global_k,
+    "script_composition": script_composition,
+    "temperature_lang_sample_a25": temperature_lang_sample_a25,
+    "warc_html_prose": warc_html_prose,
+    "warc_ingest_stats": warc_ingest_stats,
+    "wat_link_graph": wat_link_graph,
+    "winnowing_overlap_pairs": winnowing_overlap_pairs,
     "a1_watermark_advance": a1_watermark_advance,
     "a2_nonempty_guard": a2_nonempty_guard,
     "a3_retention_cutoff": a3_retention_cutoff,
@@ -9869,76 +9844,22 @@ _FUNCS: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "heavy_hitter_grams": heavy_hitter_grams,
     "hourly_event_rollup": hourly_event_rollup,
     "html_extract_text": html_extract_text,
-    "html_numeric_refs": html_numeric_refs,
     "hybrid_rrf_retrieval": hybrid_rrf_retrieval,
     "image_exif_triage": image_exif_triage,
     "incremental_dedup_cross": incremental_dedup_cross,
     "ivf_pq_search": ivf_pq_search,
-    "jsonl_roundtrip_ingest": jsonl_roundtrip_ingest,
     "jsonl_zst_roundtrip": jsonl_zst_roundtrip,
     "knn_label_vote": knn_label_vote_gate,
-    "label_centroid_stats": label_centroid_stats,
     "lang_id_multi": lang_id_multi,
     "lang_id_stopwords": lang_id_stopwords,
     "length_outlier_trim": length_outlier_trim,
     "main_content_context": main_content_context,
     "main_content_extract": main_content_extract,
     "media_info_mixed": media_info_mixed,
-    "media_info_webm": media_info_webm,
-    "minhash_index_compact": minhash_index_compact,
-    "multimodal_adpcm_audio": multimodal_adpcm_audio,
-    "multimodal_avi_frames": multimodal_avi_frames,
-    "multimodal_featurize_ann": multimodal_featurize_ann,
     "multimodal_flac_audio": multimodal_flac_audio,
-    "multimodal_frame_sample": multimodal_frame_sample,
-    "multimodal_g711_audio": multimodal_g711_audio,
-    "multimodal_gif_animation": multimodal_gif_animation,
-    "multimodal_gif_fingerprint": multimodal_gif_fingerprint,
-    "multimodal_image_quality": multimodal_image_quality,
-    "multimodal_jpeg_fingerprint": multimodal_jpeg_fingerprint,
-    "multimodal_jpeg_progressive": multimodal_jpeg_progressive,
-    "multimodal_mjpeg_frames": multimodal_mjpeg_frames,
-    "multimodal_tiff_fingerprint": multimodal_tiff_fingerprint,
-    "ngram_containment_capped": ngram_containment_capped,
-    "o1_ordered_chain_page": o1_ordered_chain_page,
-    "o3_top1_scalar": o3_top1_scalar,
-    "o4_first_event_after": o4_first_event_after,
-    "o5_top2_desc": o5_top2_desc,
-    "p3_decimal_lsn_range": p3_decimal_lsn_range,
-    "p4_watermark_overlap_window": p4_watermark_overlap_window,
-    "p9_fallback_probe": p9_fallback_probe,
-    "packed_sequence_export": packed_sequence_export,
-    "parquet_compact_roundtrip": parquet_compact_roundtrip,
-    "pdf_tounicode_text": pdf_tounicode_text,
-    "quality_repetition": quality_repetition,
-    "retention_filter_counts": retention_filter_counts,
-    "robots_url_governance": robots_url_governance,
-    "sample_global_k": sample_global_k,
-    "scalar_path_surgery": scalar_path_surgery,
-    "script_composition": script_composition,
-    "semdedup_text_prune": semdedup_text_prune,
-    "sitemap_frontier": sitemap_frontier,
-    "sitemap_parse": sitemap_parse,
-    "size_trunc_math": size_trunc_math,
-    "skew_salted_agg": skew_salted_agg,
-    "stream_dedup_sessions": stream_dedup_sessions,
-    "temperature_lang_sample_a25": temperature_lang_sample_a25,
-    "text_tfidf_top_terms": text_tfidf_top_terms,
-    "u1_union_distinct_tail": u1_union_distinct_tail,
-    "unigram_fit_segment": unigram_fit_segment,
-    "unigram_fit_vocab": unigram_fit_vocab,
-    "unigram_surprisal": unigram_surprisal,
-    "w1_latest_order_per_customer": w1_latest_order_per_customer,
-    "w2_canonical_group_id": w2_canonical_group_id,
-    "w3_tail_two_patch": w3_tail_two_patch,
-    "warc_cdx_lookup": warc_cdx_lookup,
-    "warc_html_prose": warc_html_prose,
-    "warc_ingest_stats": warc_ingest_stats,
-    "warc_main_content": warc_main_content,
-    "wat_link_graph": wat_link_graph,
-    "web_curation_e2e": web_curation_e2e,
-    "winnowing_overlap_pairs": winnowing_overlap_pairs,
-    # --- fresh greens (eligible to park two rounds) ---------------
+    # ---------------------------------------------------------------
+    # Parked behind the 50-slot window: first the ROTATION_DEFERRED
+    # overflow (rotates into the next window), then the fresh greens.
     "a4_min_after_threshold": a4_min_after_threshold,
     "a5_minmax_loop_bounds": a5_minmax_loop_bounds,
     "a6_sorted_stringagg_per_group": a6_sorted_stringagg_per_group,
@@ -9961,34 +9882,113 @@ _FUNCS: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "dedup_exact": dedup_exact,
     "dedup_keep_one": dedup_keep_one,
     "dedup_minhash_lsh": dedup_minhash_lsh,
+    "multimodal_gif_animation": multimodal_gif_animation,
+    "multimodal_gif_fingerprint": multimodal_gif_fingerprint,
+    "multimodal_jpeg_progressive": multimodal_jpeg_progressive,
+    "multimodal_tiff_fingerprint": multimodal_tiff_fingerprint,
+    "ngram_containment_capped": ngram_containment_capped,
+    "p9_fallback_probe": p9_fallback_probe,
+    "packed_sequence_export": packed_sequence_export,
+    "parquet_compact_roundtrip": parquet_compact_roundtrip,
     "pii_redaction": pii_redaction,
     "pmi_collocations": pmi_collocations_gate,
     "pq_adc_search": pq_adc_search,
     "q1_pricing_summary": q1_pricing_summary,
     "quality_model_score": quality_model_score,
     "quality_rare_tokens": quality_rare_tokens,
+    "quality_repetition": quality_repetition,
     "rag_chunking": rag_chunking,
+    "retention_filter_counts": retention_filter_counts,
+    "scalar_path_surgery": scalar_path_surgery,
     "semantic_decontam": semantic_decontam,
     "semdedup_prune": semdedup_prune,
+    "semdedup_text_prune": semdedup_text_prune,
     "sentence_split_stats": sentence_split_stats,
     "sequence_packing": sequence_packing,
+    "sitemap_frontier": sitemap_frontier,
     "sitemap_index_frontier": sitemap_index_frontier,
+    "sitemap_parse": sitemap_parse,
+    "size_trunc_math": size_trunc_math,
+    "skew_salted_agg": skew_salted_agg,
     "stratified_sample_by_lang": stratified_sample_by_lang,
+    "stream_dedup_sessions": stream_dedup_sessions,
     "temperature_lang_sample": temperature_lang_sample,
     "text_bpe_token_count": text_bpe_token_count,
     "text_quality_score": text_quality_score,
+    "text_tfidf_top_terms": text_tfidf_top_terms,
     "text_token_count": text_token_count,
     "token_len_histogram": token_len_histogram,
     "token_percentiles": token_percentiles,
     "train_val_test_split": train_val_test_split,
+    "u1_union_distinct_tail": u1_union_distinct_tail,
+    "unigram_fit_segment": unigram_fit_segment,
+    "unigram_fit_vocab": unigram_fit_vocab,
     "unigram_segment_viterbi": unigram_segment_viterbi,
+    "unigram_surprisal": unigram_surprisal,
     "unimax_lang_budget": unimax_lang_budget,
     "url_dedup_domain_stats": url_dedup_domain_stats,
+    "w1_latest_order_per_customer": w1_latest_order_per_customer,
+    "w2_canonical_group_id": w2_canonical_group_id,
+    "w3_tail_two_patch": w3_tail_two_patch,
+    "warc_cdx_lookup": warc_cdx_lookup,
     "warc_charset_decode": warc_charset_decode,
+    "warc_main_content": warc_main_content,
+    "web_curation_e2e": web_curation_e2e,
     "webdataset_roundtrip": webdataset_roundtrip,
     "weighted_sample_docs": weighted_sample_docs,
     "weighted_source_mix": weighted_source_mix,
     "wordpiece_segment_fixed": wordpiece_segment_fixed,
+    # --- fresh greens (eligible to park two rounds) ---------------
+    "asof_last_purchase": asof_last_purchase,
+    "bloom_prefilter_verdicts": bloom_prefilter_verdicts,
+    "boilerplate_line_removal": boilerplate_line_removal,
+    "bpe_byte_level": bpe_byte_level,
+    "bpe_merge_candidates": bpe_merge_candidates,
+    "bpe_packed_export": bpe_packed_export,
+    "bpe_segment_fixed": bpe_segment_fixed,
+    "ccnet_perplexity": ccnet_perplexity,
+    "chain_state_fold": chain_state_fold,
+    "chunk_dedup_spans": chunk_dedup_spans,
+    "contamination_ngram": contamination_ngram,
+    "corpus_version_diff": corpus_version_diff,
+    "crawl_frontier_batch": crawl_frontier_batch,
+    "dedup_ngram_jaccard": dedup_ngram_jaccard,
+    "dedup_simhash": dedup_simhash,
+    "dedup_source_matrix": dedup_source_matrix,
+    "doc_fingerprint": doc_fingerprint,
+    "domain_cap_topn": domain_cap_topn,
+    "dsir_selection": dsir_selection,
+    "dup_window_spans": dup_window_spans,
+    "edit_distance_pairs": edit_distance_pairs,
+    "embedding_cosine_topk": embedding_cosine_topk,
+    "embedding_covariance": embedding_covariance,
+    "embedding_near_dup": embedding_near_dup,
+    "embedding_quantize_profile": embedding_quantize_profile,
+    "event_sessionization": event_sessionization,
+    "fineweb_quality": fineweb_quality,
+    "funnel_view_click_purchase": funnel_view_click_purchase,
+    "global_shard_ids": global_shard_ids,
+    "gopher_quality": gopher_quality,
+    "gopher_repetition": gopher_repetition,
+    "hard_negative_mining": hard_negative_mining,
+    "j1_region_revenue": j1_region_revenue,
+    "j2_customers_without_recent_orders": j2_customers_without_recent_orders,
+    "j3_filtered_left_join": j3_filtered_left_join,
+    "j5_order_lines_json": j5_order_lines_json,
+    "j6_watermark_antijoin_dedup": j6_watermark_antijoin_dedup,
+    "json_props_extract": json_props_extract,
+    "media_info_mp4": media_info_mp4,
+    "media_info_web": media_info_web,
+    "multimodal_audio_quality": multimodal_audio_quality,
+    "multimodal_audiofp_fingerprint": multimodal_audiofp_fingerprint,
+    "multimodal_ccitt_fax": multimodal_ccitt_fax,
+    "multimodal_dhash_fingerprint": multimodal_dhash_fingerprint,
+    "multimodal_jpeg_12bit": multimodal_jpeg_12bit,
+    "multimodal_metadata": multimodal_metadata,
+    "ngram_containment": ngram_containment,
+    "pdf_extract_text": pdf_extract_text,
+    "pdf_scanned_images": pdf_scanned_images,
+    "zorder_cluster_stats": zorder_cluster_stats,
 }
 
 # Structural rotation debt, made explicit and bounded. The registry
@@ -10006,84 +10006,84 @@ ROTATION_DEFERRED: frozenset[str] = frozenset(
         # Computed by tools/rotation.py (see tools/regen_registry.py):
         # parked gates whose last green row predates the latest
         # recorded round — they rotate into the NEXT window.
-        "a1_watermark_advance",
-        "a2_nonempty_guard",
-        "a3_retention_cutoff",
-        "compression_ratio_signal",
-        "embed_hashed_text",
-        "frontier_fetch_waves",
-        "heavy_hitter_grams",
-        "hourly_event_rollup",
-        "html_extract_text",
-        "html_numeric_refs",
-        "hybrid_rrf_retrieval",
-        "image_exif_triage",
-        "incremental_dedup_cross",
-        "ivf_pq_search",
-        "jsonl_roundtrip_ingest",
-        "jsonl_zst_roundtrip",
-        "knn_label_vote",
-        "label_centroid_stats",
-        "lang_id_multi",
-        "lang_id_stopwords",
-        "length_outlier_trim",
-        "main_content_context",
-        "main_content_extract",
-        "media_info_mixed",
-        "media_info_webm",
-        "minhash_index_compact",
-        "multimodal_adpcm_audio",
-        "multimodal_avi_frames",
-        "multimodal_featurize_ann",
-        "multimodal_flac_audio",
-        "multimodal_frame_sample",
-        "multimodal_g711_audio",
+        "a4_min_after_threshold",
+        "a5_minmax_loop_bounds",
+        "a6_sorted_stringagg_per_group",
+        "a7_global_stringagg",
+        "ann_ivf_topk",
+        "ann_lsh_topk",
+        "approx_distinct_users",
+        "bm25_ranking",
+        "bpe_fertility_lang",
+        "bpe_roundtrip_decode",
+        "case_type_map",
+        "char_entropy_quality",
+        "corpus_report",
+        "corpus_token_budget",
+        "curation_funnel",
+        "curation_pipeline_e2e",
+        "datefmt_stopat",
+        "dedup_cluster_histogram",
+        "dedup_clusters",
+        "dedup_exact",
+        "dedup_keep_one",
+        "dedup_minhash_lsh",
         "multimodal_gif_animation",
         "multimodal_gif_fingerprint",
-        "multimodal_image_quality",
-        "multimodal_jpeg_fingerprint",
         "multimodal_jpeg_progressive",
-        "multimodal_mjpeg_frames",
         "multimodal_tiff_fingerprint",
         "ngram_containment_capped",
-        "o1_ordered_chain_page",
-        "o3_top1_scalar",
-        "o4_first_event_after",
-        "o5_top2_desc",
-        "p3_decimal_lsn_range",
-        "p4_watermark_overlap_window",
         "p9_fallback_probe",
         "packed_sequence_export",
         "parquet_compact_roundtrip",
-        "pdf_tounicode_text",
+        "pii_redaction",
+        "pmi_collocations",
+        "pq_adc_search",
+        "q1_pricing_summary",
+        "quality_model_score",
+        "quality_rare_tokens",
         "quality_repetition",
+        "rag_chunking",
         "retention_filter_counts",
-        "robots_url_governance",
-        "sample_global_k",
         "scalar_path_surgery",
-        "script_composition",
+        "semantic_decontam",
+        "semdedup_prune",
         "semdedup_text_prune",
+        "sentence_split_stats",
+        "sequence_packing",
         "sitemap_frontier",
+        "sitemap_index_frontier",
         "sitemap_parse",
         "size_trunc_math",
         "skew_salted_agg",
+        "stratified_sample_by_lang",
         "stream_dedup_sessions",
-        "temperature_lang_sample_a25",
+        "temperature_lang_sample",
+        "text_bpe_token_count",
+        "text_quality_score",
         "text_tfidf_top_terms",
+        "text_token_count",
+        "token_len_histogram",
+        "token_percentiles",
+        "train_val_test_split",
         "u1_union_distinct_tail",
         "unigram_fit_segment",
         "unigram_fit_vocab",
+        "unigram_segment_viterbi",
         "unigram_surprisal",
+        "unimax_lang_budget",
+        "url_dedup_domain_stats",
         "w1_latest_order_per_customer",
         "w2_canonical_group_id",
         "w3_tail_two_patch",
         "warc_cdx_lookup",
-        "warc_html_prose",
-        "warc_ingest_stats",
+        "warc_charset_decode",
         "warc_main_content",
-        "wat_link_graph",
         "web_curation_e2e",
-        "winnowing_overlap_pairs",
+        "webdataset_roundtrip",
+        "weighted_sample_docs",
+        "weighted_source_mix",
+        "wordpiece_segment_fixed",
     }
 )
 

@@ -16,6 +16,8 @@ import glob
 import json
 import os
 
+import pytest
+
 import __spark_entry__ as entry_mod
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -188,8 +190,6 @@ def test_no_oracle_emits_hugeint():
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR_TINY", "/root/testdata/sf0.001")
     if not os.path.isdir(sf_dir):
-        import pytest
-
         pytest.skip(f"no testdata at {sf_dir}")
     con = duckdb.connect()
     for t in ("region", "nation", "customer", "supplier", "part", "orders",
@@ -335,7 +335,7 @@ def test_python_bound_gate_stages_fan_out(spark):
 
     import __spark_entry__ as entry
 
-    sf_dir = os.path.join(os.path.dirname(REPO), "testdata", "sf0.001")
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR_TINY", "/root/testdata/sf0.001")
     if not os.path.isdir(sf_dir):
         pytest.skip(f"no testdata at {sf_dir}")
 
@@ -384,7 +384,7 @@ def test_grouped_python_gate_stages_fan_out(spark):
 
     import __spark_entry__ as entry
 
-    sf_dir = os.path.join(os.path.dirname(REPO), "testdata", "sf0.001")
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR_TINY", "/root/testdata/sf0.001")
     if not os.path.isdir(sf_dir):
         pytest.skip(f"no testdata at {sf_dir}")
 
