@@ -11,6 +11,8 @@ semantics preserved: sets with no files get NULL.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -18,11 +20,27 @@ from ..schema import DBFILE_INFO
 
 _FIELDS = ["logical_name", "physical_drive", "physical_name", "file_type", "file_number"]
 
+# SQL text, parsed on the JVM in one call (a Column-builder chain costs a
+# py4j round-trip per call): file_number serialized as a string, files
+# ordered by its integer value.
+_DBFILES_JSON = (
+    "to_json(array_sort("
+    "collect_list(struct(`logical_name`, `physical_drive`, `physical_name`, `file_type`,"
+    " CAST(`file_number` AS STRING) AS `file_number`)),"
+    " (l, r) -> CASE WHEN CAST(l.file_number AS INT) < CAST(r.file_number AS INT) THEN -1"
+    " WHEN CAST(l.file_number AS INT) > CAST(r.file_number AS INT) THEN 1 ELSE 0 END"
+    ")) AS `DBFileInformation`"
+)
 
-def dbfiles_to_json_agg(backupfile: DataFrame) -> DataFrame:
-    """(backup_set_id, DBFileInformation JSON) — one row per set that has
-    live files. Excludes dropped files (state=8,
-    Get-BackupHistoryToETL.ps1:68). Deterministic file order by
+
+def dbfiles_to_json_agg(
+    backupfile: DataFrame, keys: Sequence[str] = ("backup_set_id",)
+) -> DataFrame:
+    """(*keys, DBFileInformation JSON) — one row per set that has live
+    files. ``keys`` identify a backup set: ``backup_set_id`` for one
+    server, plus the server tag for the fleet extract. Excludes dropped
+    files (state=8, Get-BackupHistoryToETL.ps1:68). Deterministic file
+    order by
     file_number (intentional strengthening — FOR JSON PATH order is
     whatever the scan produced).
 
@@ -34,28 +52,10 @@ def dbfiles_to_json_agg(backupfile: DataFrame) -> DataFrame:
     file the restore script must account for, so keeping is the safer
     default. Pinned by tests/test_operators.py::
     test_dbfiles_json_null_state_kept."""
-    struct = F.struct(
-        F.col("logical_name"),
-        F.col("physical_drive"),
-        F.col("physical_name"),
-        F.col("file_type"),
-        F.col("file_number").cast("string").alias("file_number"),
-    )
     return (
-        backupfile.filter((F.col("state").isNull()) | (F.col("state") != 8))
-        .groupBy("backup_set_id")
-        .agg(
-            F.to_json(
-                F.array_sort(
-                    F.collect_list(struct),
-                    lambda l, r: F.when(
-                        l["file_number"].cast("int") < r["file_number"].cast("int"), -1
-                    )
-                    .when(l["file_number"].cast("int") > r["file_number"].cast("int"), 1)
-                    .otherwise(0),
-                )
-            ).alias("DBFileInformation")
-        )
+        backupfile.filter("`state` IS NULL OR `state` != 8")
+        .groupBy(*keys)
+        .agg(F.expr(_DBFILES_JSON))
     )
 
 

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..schema import CONSOLIDATED_KEY
+from ..sources.readers import read_consolidated
 
 PARTITION_COL = "backup_date"
 
@@ -68,25 +69,27 @@ def idempotent_append(
     sink. Returns the number of rows appended.
 
     ``overlap_start``: lower bound of backup_start_date for possible
-    duplicates (the watermark minus the replay buffer). When given, only
-    sink partitions >= that date participate in the anti-join.
+    duplicates — the batch's earliest backup_start_date. When given,
+    only sink partitions >= that date participate in the anti-join. A
+    bound on backup_finish_date (a watermark) is NOT one: a backup that
+    starts before midnight and finishes after it sits in the partition
+    of its start date.
     """
     batch = dedup_batch(batch, key)
     if PARTITION_COL not in batch.columns:
         batch = batch.withColumn(PARTITION_COL, F.to_date("backup_start_date"))
 
-    have_target = _sink_exists(spark, target_path)
-    existing = spark.read.parquet(target_path) if have_target else None
-
-    if have_target:
-        sink_keys = existing
+    if _sink_exists(spark, target_path):
+        sink_keys = read_consolidated(spark, target_path)
         if overlap_start is not None:
             # partition pruning: dup candidates only exist at/after the
             # replay-overlap start (SURVEY §7.4.6)
             sink_keys = sink_keys.filter(
                 F.col(PARTITION_COL) >= F.lit(overlap_start.date())
             )
-        sink_keys = sink_keys.select(*key).dropDuplicates(key)
+        # no dedup of the sink side: an anti-join only asks whether a
+        # match exists, and a dedup would cost a shuffle stage per run
+        sink_keys = sink_keys.select(*key)
         batch = batch.join(sink_keys, _key_eq(batch, sink_keys, key), "left_anti")
 
     # Single materialization: the appended-row count rides along the

@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import fsutil
+from ..schema import CONSOLIDATED
+from ..sources.readers import read_consolidated
 from .merge import PARTITION_COL
 
 
@@ -64,9 +66,12 @@ def apply_retention(
 
     Partition-pruned: dates strictly before the cutoff date are plain
     directory drops (no data read); only the single boundary partition
-    (cutoff's own date) is rewritten through a temp dir + swap.
+    (cutoff's own date) is rewritten through a temp dir + swap. Every
+    read declares the sink's schema (schema.CONSOLIDATED_SINK; a
+    partition directory holds CONSOLIDATED), so none runs a
+    footer-inference job and the rewrite keeps every column and type.
     """
-    df = spark.read.parquet(target_path)
+    df = read_consolidated(spark, target_path)
     cutoff = retention_cutoff(df, retention_days, now)
     if cutoff is None:
         return 0
@@ -87,14 +92,14 @@ def apply_retention(
         if d < cutoff_date
     ]
     if doomed_dirs:
-        deleted += spark.read.parquet(*doomed_dirs).count()
+        deleted += spark.read.schema(CONSOLIDATED).parquet(*doomed_dirs).count()
         for part_dir in doomed_dirs:
             fsutil.delete(spark, part_dir)
 
     # 2. boundary partition: rewrite rows >= cutoff timestamp
     boundary = f"{root}/{PARTITION_COL}={cutoff_date.isoformat()}"
     if fsutil.exists(spark, boundary):
-        part = spark.read.parquet(boundary)
+        part = spark.read.schema(CONSOLIDATED).parquet(boundary)
         doomed = part.filter(F.col("backup_start_date") < F.lit(cutoff)).count()
         if doomed > 0:
             keep = part.filter(F.col("backup_start_date") >= F.lit(cutoff))

@@ -5,31 +5,42 @@ Reference lifecycle: scan control table → per-server sequential loop of
 (extract → row-at-a-time load → watermark UPDATE). The engine keeps the
 *recovery semantics* (extract failure ⇒ skip server, watermark
 untouched, retried next run; load failure ⇒ abort run — SURVEY §2.11.6)
-but replaces the sequential loop with a set-based plan:
+but replaces the sequential loop with ONE fleet plan
+(sources/extract.py):
 
-    union of per-server extracts → ONE dedup + anti-join + append →
-    groupBy(server).max(backup_finish_date) → one control-table upsert
+    per server, inside its own try: six tables projected to the
+    extract's columns, tagged with a server index, watermark-filtered
+    → tables unioned across servers → J1-J5 + the file-list
+    aggregation once, keyed by (server index, msdb id)
+    → LogIDs → one localCheckpoint → ONE dedup + anti-join + append
+    → groupBy(server).max(backup_finish_date) → one control-table upsert
 
-One shuffle-free union, one merge, one watermark write — the shape that
-scales to N servers × 100 TB. LogID is assigned as
-monotonically_increasing_id() + max existing (surrogate only; query
-semantics never depend on its density — SURVEY §1.2 row 1).
+A server whose tables do not project (no source registered, a missing
+column) is skipped before anything is unioned. The plan, its broadcast
+exchanges and its Spark job count are the same for one server as for
+N. The sink, the LogID sidecar and the control table are all read with
+declared schemas, so no run pays a footer-inference job. LogID is
+assigned as monotonically_increasing_id() + max existing (surrogate
+only; query semantics never depend on its density — SURVEY §1.2 row 1).
 """
 
 from __future__ import annotations
 
-import datetime as dt
 import logging
 from dataclasses import dataclass, field
-from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .. import fsutil
 from ..operators.merge import idempotent_append
-from ..sources.extract import REPLAY_BUFFER_MINUTES, extract_backup_history
-from ..sources.readers import SourceTables
+from ..sources.extract import (  # noqa: F401 — extract_backup_history re-exported
+    REPLAY_BUFFER_MINUTES,
+    extract_backup_history,
+    extract_fleet,
+    project_source,
+)
+from ..sources.readers import SourceTables, read_consolidated
 from .watermark import read_source_servers, update_watermarks
 
 log = logging.getLogger(__name__)
@@ -40,6 +51,9 @@ class ETLResult:
     rows_appended: int = 0
     servers_ok: list[str] = field(default_factory=list)
     servers_skipped: list[str] = field(default_factory=list)
+
+
+_HWM_SCHEMA = "max_log_id long"
 
 
 def _hwm_path(target_path: str) -> str:
@@ -56,17 +70,23 @@ def _read_logid_hwm(spark: SparkSession, target_path: str) -> int:
     from ..operators.merge import _sink_exists
 
     if fsutil.exists(spark, _hwm_path(target_path)):
-        return spark.read.parquet(_hwm_path(target_path)).first()["max_log_id"]
+        return (
+            spark.read.schema(_HWM_SCHEMA)
+            .parquet(_hwm_path(target_path))
+            .first()["max_log_id"]
+        )
     if _sink_exists(spark, target_path):
         log.info("LogID sidecar missing — one-time full-sink scan to seed it")
-        return spark.read.parquet(target_path).agg(F.max("LogID")).first()[0] or 0
+        return read_consolidated(spark, target_path).agg(F.max("LogID")).first()[0] or 0
     return 0
 
 
 def _write_logid_hwm(spark: SparkSession, target_path: str, value: int) -> None:
     from .watermark import _atomic_overwrite
 
-    df = spark.createDataFrame([(int(value),)], "max_log_id long")
+    # built on the JVM: createDataFrame from Python rows would run the
+    # write's one task through a Python worker
+    df = spark.range(1).select(F.lit(int(value)).cast("long").alias("max_log_id"))
     _atomic_overwrite(spark, df, _hwm_path(target_path))
 
 
@@ -74,6 +94,38 @@ def _with_log_id(spark: SparkSession, batch: DataFrame, max_id: int) -> DataFram
     return batch.withColumn(
         "LogID", (F.monotonically_increasing_id() + F.lit(max_id + 1)).cast("long")
     )
+
+
+def _extract_batch(
+    sources: dict[str, SourceTables],
+    servers: list,
+    replay_buffer_minutes: int,
+    result: ETLResult,
+) -> DataFrame | None:
+    """The fleet extract over every registered server that projects
+    cleanly; None when none does. A server with no registered source, or
+    whose tables lack a column the extract reads, is skipped — its
+    watermark stays put and the next run retries it."""
+    projected: list[SourceTables] = []
+    for row in servers:
+        name, wm = row["ServerName"], row["LastETLDatetime"]
+        src = sources.get(name)
+        if src is None:
+            log.warning("no source registered for %s — skipping", name)
+            result.servers_skipped.append(name)
+            continue
+        try:
+            projected.append(
+                project_source(src, len(projected), wm, replay_buffer_minutes)
+            )
+        except Exception:  # extract failure ⇒ skip server, watermark untouched
+            log.exception("extract failed for %s — skipping", name)
+            result.servers_skipped.append(name)
+            continue
+        result.servers_ok.append(name)
+    if not projected:
+        return None
+    return _cast_load_types(extract_fleet(projected))
 
 
 def run_etl(
@@ -86,32 +138,12 @@ def run_etl(
     """One incremental run over every registered source server."""
     result = ETLResult()
     servers = read_source_servers(spark, control_path).collect()
-
-    batches: list[DataFrame] = []
-    min_wm: dt.datetime | None = None
-    for row in servers:
-        name, wm = row["ServerName"], row["LastETLDatetime"]
-        src = sources.get(name)
-        if src is None:
-            log.warning("no source registered for %s — skipping", name)
-            result.servers_skipped.append(name)
-            continue
-        try:
-            batch = extract_backup_history(src, wm, replay_buffer_minutes)
-        except Exception:  # extract failure ⇒ skip server, watermark untouched
-            log.exception("extract failed for %s — skipping", name)
-            result.servers_skipped.append(name)
-            continue
-        batches.append(batch)
-        result.servers_ok.append(name)
-        min_wm = wm if min_wm is None else min(min_wm, wm)
-
-    if not batches:
+    batch = _extract_batch(sources, servers, replay_buffer_minutes, result)
+    if batch is None:
         return result
 
-    union = reduce(DataFrame.unionByName, batches)
     prev_hwm = _read_logid_hwm(spark, target_path)
-    union = _with_log_id(spark, _cast_load_types(union), prev_hwm)
+    batch = _with_log_id(spark, batch, prev_hwm)
 
     # Materialize the extracted batch EXACTLY ONCE (r3 verdict task 4).
     # Deriving the append and the watermark maxima from the same lazy
@@ -121,8 +153,18 @@ def run_etl(
     # it. The reference computes maxima over the loaded batch
     # (Invoke-SQLBackupHistoryETL.ps1:46-47); localCheckpoint pins that
     # snapshot (executor-local storage, truncated lineage) so both
-    # consumers read the identical rows with one source read.
-    union = union.localCheckpoint(eager=True)
+    # consumers read the identical rows with one source read. The
+    # batch's LogID maximum and earliest start ride the checkpoint job
+    # as an Observation — no separate aggregation job.
+    bounds = Observation()
+    batch = batch.observe(
+        bounds,
+        F.max("LogID").alias("hwm"),
+        F.min("backup_start_date").alias("first_start"),
+    ).localCheckpoint(eager=True)
+    new_hwm, first_start = bounds.get["hwm"], bounds.get["first_start"]
+    if new_hwm is None:  # nothing extracted: no append, no mark moves
+        return result
 
     # Sidecar high-water mark BEFORE the append (r4 ADVICE): with the
     # reverse order, a crash in the window between append and sidecar
@@ -132,23 +174,22 @@ def run_etl(
     # NEXT batch's ids collide with committed rows. Written first, the
     # mark always bounds every id the append may commit; a crash after
     # it costs only an id gap (the surrogate is never dense —
-    # SURVEY §1.2). The max scans the checkpointed snapshot, not the
-    # sources.
-    new_hwm = union.agg(F.max("LogID")).first()[0]
-    if new_hwm is not None and new_hwm > prev_hwm:
+    # SURVEY §1.2).
+    if new_hwm > prev_hwm:
         _write_logid_hwm(spark, target_path, new_hwm)
 
-    overlap_start = (
-        min_wm - dt.timedelta(minutes=replay_buffer_minutes) if min_wm else None
-    )
+    # Duplicate candidates are batch keys already in the sink, and the
+    # sink partitions by start date — so the prune bound is the batch's
+    # earliest backup_start_date, not the watermark (a finish-date
+    # bound), which would miss a replayed backup that crossed midnight.
     # Load failure propagates (aborts the run) — watermarks then stay
     # put and the next run replays; the idempotent sink absorbs it.
     result.rows_appended = idempotent_append(
-        spark, union, target_path, overlap_start=overlap_start
+        spark, batch, target_path, overlap_start=first_start
     )
 
     new_marks = (
-        union.groupBy(F.col("server_name").alias("ServerName"))
+        batch.groupBy(F.col("server_name").alias("ServerName"))
         .agg(F.max("backup_finish_date").alias("MaxETLDateTime"))
         .filter(F.col("ServerName").isNotNull())
     )
@@ -210,8 +251,9 @@ def run_etl_jdbc(
       sidecar; a missing target table reads as hwm 0 / no existing
       keys — the first append auto-creates it.
     - The dup-candidate key slice reads back through Spark's JDBC
-      filter pushdown (``backup_finish_date >= overlap_start`` runs
-      server-side), shipping only the overlap window's key columns.
+      filter pushdown (``backup_finish_date >=`` the batch's earliest
+      finish runs server-side), shipping only the overlap window's key
+      columns.
     - Watermark updates are per-server parameterized statements
       (:func:`..plans.sinks.jdbc_update_watermark`) — one row each,
       the reference's own write shape, injection-impossible.
@@ -233,26 +275,8 @@ def run_etl_jdbc(
         props,
     ).collect()
 
-    batches: list[DataFrame] = []
-    min_wm: dt.datetime | None = None
-    for row in servers:
-        name, wm = row["ServerName"], row["LastETLDatetime"]
-        src = sources.get(name)
-        if src is None:
-            log.warning("no source registered for %s — skipping", name)
-            result.servers_skipped.append(name)
-            continue
-        try:
-            batch = extract_backup_history(src, wm, replay_buffer_minutes)
-        except Exception:  # extract failure ⇒ skip server, watermark untouched
-            log.exception("extract failed for %s — skipping", name)
-            result.servers_skipped.append(name)
-            continue
-        batches.append(batch)
-        result.servers_ok.append(name)
-        min_wm = wm if min_wm is None else min(min_wm, wm)
-
-    if not batches:
+    batch = _extract_batch(sources, servers, replay_buffer_minutes, result)
+    if batch is None:
         return result
 
     def _target_reader():
@@ -273,7 +297,8 @@ def run_etl_jdbc(
     # LogIDs. If the table exists, a failing read now PROPAGATES and
     # aborts the run (the load-failure contract: watermarks untouched,
     # next run replays, the anti-join absorbs it).
-    if _jdbc_table_exists(spark, url, target_table, props):
+    exists = _jdbc_table_exists(spark, url, target_table, props)
+    if exists:
         prev_hwm = int(
             jdbc_extract_reader(
                 spark,
@@ -283,24 +308,32 @@ def run_etl_jdbc(
             ).first()["max_log_id"]
             or 0
         )
-        existing = _target_reader()
-        if min_wm is not None:
-            overlap = min_wm - dt.timedelta(minutes=replay_buffer_minutes)
-            existing = existing.filter(
-                F.col("backup_finish_date") >= F.lit(overlap)
-            )
-        existing = existing.select(*CONSOLIDATED_KEY)
     else:
         log.info("target %s does not exist — first run", target_table)
         prev_hwm = 0
-        existing = batches[0].select(*CONSOLIDATED_KEY).limit(0)
 
-    union = reduce(DataFrame.unionByName, batches)
-    union = _with_log_id(spark, _cast_load_types(union), prev_hwm)
     # one materialization feeds both the append and the watermark maxima
     # (the run_etl rationale: rows arriving between two source pulls
-    # could advance a mark past data the append never saw)
-    union = union.localCheckpoint(eager=True)
+    # could advance a mark past data the append never saw); the batch's
+    # earliest finish rides the checkpoint job as an Observation
+    bounds = Observation()
+    union = (
+        _with_log_id(spark, batch, prev_hwm)
+        .observe(bounds, F.min("backup_finish_date").alias("first_finish"))
+        .localCheckpoint(eager=True)
+    )
+    first_finish = bounds.get["first_finish"]
+    if first_finish is None:  # nothing extracted: no append, no mark moves
+        return result
+    if exists:
+        # a duplicate in the target has its batch twin's finish date
+        existing = (
+            _target_reader()
+            .filter(F.col("backup_finish_date") >= F.lit(first_finish))
+            .select(*CONSOLIDATED_KEY)
+        )
+    else:
+        existing = union.select(*CONSOLIDATED_KEY).limit(0)
 
     result.rows_appended = jdbc_append_new_rows(
         union, url, target_table, existing, properties=props

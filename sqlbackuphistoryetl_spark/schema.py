@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
+    DateType,
     DecimalType,
     IntegerType,
     LongType,
@@ -54,6 +55,14 @@ CONSOLIDATED = StructType(
         StructField("position", IntegerType(), True),
         StructField("DBFileInformation", StringType(), True),  # JSON array
     ]
+)
+
+#: The consolidated sink as stored: CONSOLIDATED plus the ``backup_date``
+#: partition column (to_date(backup_start_date), operators/merge.py).
+#: Every read of the sink declares it, so no read runs a footer-inference
+#: job.
+CONSOLIDATED_SINK = StructType(
+    CONSOLIDATED.fields + [StructField("backup_date", DateType(), True)]
 )
 
 #: Utility.SQLBackupHistorySourceServers (sql:42-51) — watermark control.

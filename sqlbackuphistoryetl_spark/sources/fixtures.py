@@ -210,15 +210,47 @@ def raw_source_rows() -> dict[str, list[dict]]:
     )
 
 
-def raw_source_tables(spark: SparkSession):
-    from .readers import SourceTables
-
+def fleet_source_rows(k: int) -> dict[str, list[dict]]:
+    """msdb-shaped inputs for fleet server ``k`` (SQLNODE0{k+1}); k=0 is
+    :func:`raw_source_rows`. Every server reuses the same
+    media_set_id / backup_set_id / database_id values, database names
+    and AG group_id — msdb ids are only unique within one server — so
+    an extract that joins across servers on them shows up as extra or
+    mislabelled rows. Per server: its own device paths, LSNs, file
+    names and AG name; on k=1 the database ids are swapped (db_sa1 is
+    the AG database there); on k=2 no replica is local (no ag_name)."""
     rows = raw_source_rows()
+    if k == 0:
+        return rows
+    server = f"SQLNODE0{k + 1}"
+    for bs in rows["backupset"]:
+        bs.update(server_name=server, first_lsn=bs["first_lsn"] + 10_000 * k,
+                  last_lsn=bs["last_lsn"] + 10_000 * k)
+    for mf in rows["backupmediafamily"]:
+        mf["physical_device_name"] = mf["physical_device_name"].replace("bk", f"bk{k}")
+    for bf in rows["backupfile"]:
+        bf["logical_name"] = f"{bf['logical_name']}_{k}"
+    if k == 1:
+        rows["databases"] = [dict(name="db_sa1", database_id=6),
+                             dict(name="db_ag_x", database_id=5)]
+    if k == 2:
+        for rs in rows["replica_states"]:
+            rs["is_local"] = False
+    rows["availability_groups"] = [dict(group_id="ag-guid-1", name=f"AG0{k + 1}")]
+    return rows
+
+
+def source_tables_from_rows(spark: SparkSession, rows: dict[str, list[dict]]):
+    """The six tables of one server as DataFrames with declared schemas."""
+    from .readers import _TABLE_SCHEMAS, SourceTables
+
     return SourceTables(
-        backupset=spark.createDataFrame(rows["backupset"], schema.BACKUPSET),
-        backupmediafamily=spark.createDataFrame(rows["backupmediafamily"], schema.BACKUPMEDIAFAMILY),
-        backupfile=spark.createDataFrame(rows["backupfile"], schema.BACKUPFILE),
-        databases=spark.createDataFrame(rows["databases"], schema.DATABASES),
-        replica_states=spark.createDataFrame(rows["replica_states"], schema.REPLICA_STATES),
-        availability_groups=spark.createDataFrame(rows["availability_groups"], schema.AVAILABILITY_GROUPS),
+        **{
+            name: spark.createDataFrame(rows[name], declared)
+            for name, declared in _TABLE_SCHEMAS.items()
+        }
     )
+
+
+def raw_source_tables(spark: SparkSession):
+    return source_tables_from_rows(spark, raw_source_rows())

@@ -14,6 +14,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import schema
+
 
 @dataclass
 class SourceTables:
@@ -27,26 +29,31 @@ class SourceTables:
     availability_groups: DataFrame
 
 
-_TABLE_NAMES = [
-    "backupset",
-    "backupmediafamily",
-    "backupfile",
-    "databases",
-    "replica_states",
-    "availability_groups",
-]
+#: The six tables with their declared schemas (schema.py). Reading with
+#: a declared schema skips Spark's footer-inference job per table.
+_TABLE_SCHEMAS = {
+    "backupset": schema.BACKUPSET,
+    "backupmediafamily": schema.BACKUPMEDIAFAMILY,
+    "backupfile": schema.BACKUPFILE,
+    "databases": schema.DATABASES,
+    "replica_states": schema.REPLICA_STATES,
+    "availability_groups": schema.AVAILABILITY_GROUPS,
+}
 
 
 def read_source_tables(spark: SparkSession, path: str) -> SourceTables:
     """Read the six msdb-shaped tables from ``{path}/{name}.parquet``."""
     return SourceTables(
-        **{name: spark.read.parquet(f"{path}/{name}.parquet") for name in _TABLE_NAMES}
+        **{
+            name: spark.read.schema(declared).parquet(f"{path}/{name}.parquet")
+            for name, declared in _TABLE_SCHEMAS.items()
+        }
     )
 
 
 def read_consolidated(spark: SparkSession, path: str) -> DataFrame:
     """Read the consolidated sink (partitioned by backup_date)."""
-    return spark.read.parquet(path)
+    return spark.read.schema(schema.CONSOLIDATED_SINK).parquet(path)
 
 
 def jdbc_extract_reader(

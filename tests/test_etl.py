@@ -209,3 +209,141 @@ def test_hwm_written_before_append(spark, tmp_path, monkeypatch):
            spark.read.parquet(target).select("LogID").collect()]
     assert len(ids) == len(set(ids))
     assert min(ids) > hwm_after_crash
+
+
+def _visible(sources, clock):
+    """Each server's msdb as of ``clock``: backups that have finished."""
+    from sqlbackuphistoryetl_spark.sources.readers import SourceTables
+
+    return {
+        name: SourceTables(**{
+            **vars(t),
+            "backupset": t.backupset.filter(F.col("backup_finish_date") <= F.lit(clock)),
+        })
+        for name, t in sources.items()
+    }
+
+
+def test_midnight_crossing_replay_appends_nothing(spark, tmp_path):
+    """A Full that runs 23:50 -> 00:02 lands in the sink partition of its
+    START date. The 00:20 run re-extracts it inside the replay buffer
+    (watermark 00:06 − 5 min); the anti-join must still see it, so the
+    second run appends nothing and the Full is in the sink once."""
+    from decimal import Decimal
+
+    from sqlbackuphistoryetl_spark.sources.fixtures import B, source_tables_from_rows
+
+    day1, day2 = dt.datetime(2025, 1, 1), dt.datetime(2025, 1, 2)
+
+    def backupset(set_id, btype, start, finish, first, last):
+        return dict(backup_set_id=set_id, media_set_id=set_id, database_name="db1",
+                    type=btype, backup_start_date=start, backup_finish_date=finish,
+                    server_name="SQLNODE01", recovery_model="FULL",
+                    first_lsn=B + first, last_lsn=B + last, backup_size=Decimal(4096),
+                    compressed_backup_size=Decimal(2048), is_copy_only=False,
+                    encryptor_type=None, key_algorithm=None, position=1)
+
+    rows = dict(
+        backupset=[
+            backupset(1, "D", day1.replace(hour=23, minute=50), day2.replace(minute=2), 100, 200),
+            backupset(2, "L", day2.replace(minute=5), day2.replace(minute=6), 200, 300),
+        ],
+        backupmediafamily=[
+            dict(media_set_id=1, physical_device_name="X:\\bk\\db1_full.bak", device_type=2),
+            dict(media_set_id=2, physical_device_name="X:\\bk\\db1_log.trn", device_type=2),
+        ],
+        backupfile=[
+            dict(backup_set_id=1, logical_name="db1_data", physical_drive="D:",
+                 physical_name="D:\\db1.mdf", file_type="D", file_number=1, state=0),
+        ],
+        databases=[dict(name="db1", database_id=5)],
+        replica_states=[],
+        availability_groups=[],
+    )
+    sources = {"SQLNODE01": source_tables_from_rows(spark, rows)}
+    control = str(tmp_path / "control")
+    target = str(tmp_path / "consolidated")
+    init_source_servers(spark, control, ["SQLNODE01"], initial_watermark=day1)
+
+    r1 = run_etl(spark, _visible(sources, day2.replace(minute=10)), control, target)
+    assert r1.rows_appended == 2
+    r2 = run_etl(spark, _visible(sources, day2.replace(minute=20)), control, target)
+    assert r2.rows_appended == 0
+
+    sink = spark.read.parquet(target)
+    assert sink.count() == 2
+    assert sink.filter(F.col("BackupType") == "Full").count() == 1
+    assert read_source_servers(spark, control).first()["LastETLDatetime"] == day2.replace(minute=6)
+
+
+def test_server_missing_a_column_is_skipped(spark, tmp_path):
+    """A server whose backupset lacks a column the extract reads is
+    reported skipped and keeps its watermark; the rest of the fleet
+    still loads in the same run."""
+    from sqlbackuphistoryetl_spark.sources.fixtures import (
+        fleet_source_rows,
+        source_tables_from_rows,
+    )
+    from sqlbackuphistoryetl_spark.sources.readers import SourceTables
+
+    names = ["SQLNODE01", "SQLNODE02", "SQLNODE03"]
+    sources = {n: source_tables_from_rows(spark, fleet_source_rows(k))
+               for k, n in enumerate(names)}
+    broken = sources["SQLNODE03"]
+    sources["SQLNODE03"] = SourceTables(**{
+        **vars(broken), "backupset": broken.backupset.drop("key_algorithm")})
+    control = str(tmp_path / "control")
+    target = str(tmp_path / "consolidated")
+    wm = dt.datetime(2025, 1, 1, 9, 0)
+    init_source_servers(spark, control, names, initial_watermark=wm)
+
+    r = run_etl(spark, sources, control, target)
+    assert r.servers_ok == ["SQLNODE01", "SQLNODE02"]
+    assert r.servers_skipped == ["SQLNODE03"]
+    assert r.rows_appended == 8  # sets 1 (2 stripes), 2, 3 on each loaded server
+
+    marks = {row["ServerName"]: row["LastETLDatetime"]
+             for row in read_source_servers(spark, control).collect()}
+    assert marks == {"SQLNODE01": dt.datetime(2025, 1, 1, 12, 5),
+                     "SQLNODE02": dt.datetime(2025, 1, 1, 12, 5),
+                     "SQLNODE03": wm}
+    servers = {row[0] for row in spark.read.parquet(target).select("server_name").collect()}
+    assert servers == {"SQLNODE01", "SQLNODE02"}
+
+
+def test_run_etl_job_count_independent_of_fleet_size(spark, tmp_path):
+    """One fleet plan: a first run and a replay run launch as many Spark
+    jobs for three servers as for one (a per-server extract adds its
+    broadcast exchanges once per server)."""
+    from sqlbackuphistoryetl_spark.sources.fixtures import (
+        fleet_source_rows,
+        source_tables_from_rows,
+    )
+
+    sc = spark.sparkContext
+    names = ["SQLNODE01", "SQLNODE02", "SQLNODE03"]
+    tables = {n: source_tables_from_rows(spark, fleet_source_rows(k))
+              for k, n in enumerate(names)}
+
+    def jobs(n_servers: int) -> list[int]:
+        fleet = {n: tables[n] for n in names[:n_servers]}
+        control = str(tmp_path / f"control{n_servers}")
+        target = str(tmp_path / f"consolidated{n_servers}")
+        init_source_servers(spark, control, list(fleet),
+                            initial_watermark=dt.datetime(2025, 1, 1, 9, 0))
+        counts = []
+        for run in ("first", "replay"):
+            group = f"etl-jobs-{n_servers}-{run}"
+            sc.setJobGroup(group, group)
+            try:
+                r = run_etl(spark, fleet, control, target)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            assert r.servers_ok == list(fleet)
+            # job events reach the status store through the listener bus
+            sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+            counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        return counts
+
+    one, three = jobs(1), jobs(3)
+    assert one == three, (one, three)

@@ -73,3 +73,51 @@ def test_json_file_info_excludes_dropped(extracted):
 def test_schema_has_18_columns(extracted):
     out, _ = extracted
     assert len(out.columns) == 18
+
+
+def test_fleet_extract_equals_union_of_single_server_extracts(spark):
+    """One plan for the whole fleet: three servers whose media_set_id,
+    backup_set_id, database names and AG group_id collide must extract
+    exactly the rows of three separate single-server extracts — stripe
+    fan-out, ag_name and DBFileInformation included."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+
+    from sqlbackuphistoryetl_spark.sources.extract import extract_fleet, project_source
+    from sqlbackuphistoryetl_spark.sources.fixtures import (
+        fleet_source_rows,
+        source_tables_from_rows,
+    )
+
+    marks = [dt.datetime(2025, 1, 1, 10, 4), None, dt.datetime(2025, 1, 1, 9, 0)]
+    srcs = [source_tables_from_rows(spark, fleet_source_rows(k)) for k in range(3)]
+    fleet = extract_fleet(
+        [project_source(s, k, wm) for k, (s, wm) in enumerate(zip(srcs, marks))]
+    )
+    single = reduce(
+        DataFrame.union, [extract_backup_history(s, wm) for s, wm in zip(srcs, marks)]
+    )
+    assert fleet.columns == single.columns
+
+    got = sorted(fleet.collect(), key=repr)
+    assert got == sorted(single.collect(), key=repr)
+    # sets 1 (2 stripes), 2, 3 on SQLNODE01 and SQLNODE03; all four on
+    # SQLNODE02, whose mark is NULL
+    assert len(got) == 4 + 5 + 4
+    ag = {(r["server_name"], r["database_name"]): r["ag_name"] for r in got}
+    assert ag == {
+        ("SQLNODE01", "db_sa1"): None, ("SQLNODE01", "db_ag_x"): "AG01",
+        ("SQLNODE02", "db_sa1"): "AG02", ("SQLNODE02", "db_ag_x"): None,
+        ("SQLNODE03", "db_sa1"): None, ("SQLNODE03", "db_ag_x"): None,
+    }
+    files = {
+        r["server_name"]: [f["logical_name"] for f in json.loads(r["DBFileInformation"])]
+        for r in got
+        if r["BackupType"] == "Full" and r["backup_start_date"] == dt.datetime(2025, 1, 1, 10)
+    }
+    assert files == {
+        "SQLNODE01": ["db_sa1_data", "db_sa1_log"],
+        "SQLNODE02": ["db_sa1_data_1", "db_sa1_log_1"],
+        "SQLNODE03": ["db_sa1_data_2", "db_sa1_log_2"],
+    }

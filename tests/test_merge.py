@@ -304,3 +304,31 @@ def test_delta_merge_condition_is_null_safe(spark, tmp_path, fake_delta):
     replay = spark.createDataFrame([null_key], nullable)
     assert idempotent_merge_delta(spark, replay, target) == 0
     assert spark.read.parquet(target).count() == 1
+
+
+def test_retention_boundary_rewrite_keeps_columns_and_types(spark, tmp_path):
+    """The boundary partition is rewritten from a declared-schema read;
+    the rewritten files must carry every column of the files run_etl
+    wrote, each with its type, and no partition column."""
+    from sqlbackuphistoryetl_spark.plans.etl import run_etl
+    from sqlbackuphistoryetl_spark.plans.watermark import init_source_servers
+    from sqlbackuphistoryetl_spark.sources.fixtures import raw_source_tables
+
+    control = str(tmp_path / "control")
+    target = str(tmp_path / "consolidated")
+    init_source_servers(spark, control, ["SQLNODE01"],
+                        initial_watermark=dt.datetime(2025, 1, 1))
+    assert run_etl(spark, {"SQLNODE01": raw_source_tables(spark)}, control, target
+                   ).rows_appended == 5
+    boundary = f"{target}/backup_date=2025-01-01"
+    before = dict(spark.read.parquet(boundary).dtypes)
+    sink_before = dict(spark.read.parquet(target).dtypes)
+
+    # threshold 11:30 ⇒ cutoff 11:00, inside the one partition: the sets
+    # that started 01:00 and 10:00 (2 stripes) go, 11:00 and 12:00 stay
+    deleted = apply_retention(spark, target, retention_days=1,
+                              now=dt.datetime(2025, 1, 2, 11, 30))
+    assert deleted == 3
+    assert dict(spark.read.parquet(boundary).dtypes) == before
+    assert dict(spark.read.parquet(target).dtypes) == sink_before
+    assert spark.read.parquet(target).count() == 2
