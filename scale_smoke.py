@@ -36,8 +36,9 @@ def synthetic_history(spark, n: int):
         F.when(seq % 24 == 0, "Full").when(seq % 6 == 0, "Diff").otherwise("Log")
     )
     start = F.timestamp_seconds(F.lit(1704067200) + seq * 3600 + db_id % 1800)
-    lsn_lo = F.lit(LSN_BASE).cast("decimal(25,0)") + (seq * 1000 + db_id)
-    lsn_hi = lsn_lo + 999
+    # the sink's declared type: decimal arithmetic widens the precision
+    lsn_lo = (F.lit(LSN_BASE).cast("decimal(25,0)") + (seq * 1000 + db_id)).cast("decimal(25,0)")
+    lsn_hi = (lsn_lo + 999).cast("decimal(25,0)")
     return df.select(
         F.col("id").alias("LogID"),
         F.concat(F.lit("db_"), F.lpad(db_id.cast("string"), 4, "0")).alias("database_name"),

@@ -23,12 +23,3 @@ def sorted_string_agg(expr: Column | str, sep: str) -> Column:
     col = F.col(expr) if isinstance(expr, str) else expr
     return F.concat_ws(sep, F.array_sort(F.collect_list(col)))
 
-
-def device_clause(device_type: Column | str = "device_type",
-                  device_name: Column | str = "physical_device_name") -> Column:
-    """``URL = N'<dev>'`` when device_type=9 else ``DISK = N'<dev>'``
-    (sql:776,978,1090,1177)."""
-    dtype = F.col(device_type) if isinstance(device_type, str) else device_type
-    dname = F.col(device_name) if isinstance(device_name, str) else device_name
-    prefix = F.when(dtype == 9, F.lit("URL = N'")).otherwise(F.lit("DISK = N'"))
-    return F.concat(prefix, dname, F.lit("'"))

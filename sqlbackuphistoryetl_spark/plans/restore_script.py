@@ -1,22 +1,26 @@
 """Restore-script generation — entry point 2, the flagship query
 (SURVEY §3.2, Utility.GenerateRestoreScript sql:427-1316).
 
-Pipeline (mirrors the proc's stages; each stage's LSN threshold comes
-from the previous stage's result, so this is inherently 3 small
-actions, not one plan — SURVEY §3.2):
+The chain comes from the same windowed planner as ``restore_plan_all``
+(``chain_all.chain_files``): the request's scoped rows with a constant
+entity, one scan and one collect of every file row of every chosen step
+(Full stripes, Diff stripes, Logs including all stripes of the first Log
+after T). The driver then assembles the text from those few rows, as
+the reference's T-SQL control flow stitches strings:
 
-1. FULL: as-of rank-filtered scan (W1) with device_type ∈ {2,9}.
-2. MOVE clause from the full's DBFileInformation JSON (path surgery).
-3. DIFF: same rank-as-of with last_lsn > full.last_lsn; skipped
-   entirely when the full is copy-only (sql:837-852).
-4. LOG: stripe-dedup (W2) + union of as-of logs with the first log
-   *after* the restore point (tail overlap, sql:1056-1065), stripe
-   collapse via sorted string_agg (A6), one RESTORE LOG row per backup
-   ordered by last_lsn; STOPAT patched onto the last two (W3).
+1. FULL: its devices in device-name order; MOVE clauses from the first
+   stripe's DBFileInformation JSON (path surgery).
+2. DIFF: its devices in device-name order; none after a copy-only
+   Full (a NULL ``is_copy_only`` is not copy-only, as the reference's
+   ``= 1`` test has it).
+3. LOG: one RESTORE LOG per striped backup (W2 + A6): its
+   ``history_log_id`` is the minimum LogID per (first_lsn, last_lsn) and
+   its devices are sorted; ordered by last_lsn, with STOPAT patched onto
+   the last two (W3) when T is given.
 
-Heavy selection/rank/collapse runs in Spark; final command *text*
-assembly happens driver-side on the collected (small) chain — same
-split as the reference, where T-SQL control flow stitches strings.
+A server-scoped request includes AG rows taken on that server, so it
+filters the rows before planning rather than planning per
+``coalesce(ag_name, server_name)``.
 
 Intentional deviations (documented, SURVEY §2.11) — in the DEFAULT
 ``style="spark"``; ``style="sqlserver"`` reproduces the reference's
@@ -40,11 +44,11 @@ from dataclasses import dataclass, field
 from decimal import Decimal
 from typing import Any
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.pathfns import ensure_trailing_backslash_py, file_name_py, leaf_path_py
-from ..operators.stringagg import device_clause, sorted_string_agg
+from .chain_all import chain_files
 
 EXAMPLE_MOVE_COMMAND = (
     "\n"
@@ -162,11 +166,6 @@ def _scope(consolidated: DataFrame, database: str, server: str | None, ag: str |
     return consolidated.filter((F.col("database_name") == F.lit(database)) & key)
 
 
-def _rank1_latest(df: DataFrame) -> DataFrame:
-    w = Window.orderBy(F.col("last_lsn").desc())
-    return df.withColumn("Rank", F.dense_rank().over(w)).filter(F.col("Rank") == 1)
-
-
 def _move_clause(
     json_file_info: str | None,
     data_path: str | None,
@@ -260,16 +259,13 @@ def generate_restore_script(
         restore_to_time = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
 
     scoped = _scope(consolidated, source_db, source_db_server, source_ag_name)
+    files: dict[str, list] = {"Full": [], "Diff": [], "Log": []}
+    # the scope holds one chain, so the entity is a constant
+    for r in chain_files(scoped, restore_to_time, "''", _CHAIN_COLS).collect():
+        files[r["BackupType"]].append(r)
 
     # ---------------- FULL (sql:555-671) ----------------
-    fulls = _rank1_latest(
-        scoped.filter(
-            (F.col("BackupType") == "Full")
-            & (F.col("backup_start_date") <= F.lit(restore_to_time))
-            & F.col("device_type").isin(2, 9)
-        )
-    )
-    full_rows = fulls.select(*_CHAIN_COLS).orderBy("physical_device_name").collect()
+    full_rows = sorted(files["Full"], key=_by_device)
     if not full_rows:
         raise ValueError("No available full backups found")
 
@@ -286,70 +282,31 @@ def generate_restore_script(
         f" WITH {move_cmd}\n,NORECOVERY,  NOUNLOAD,  STATS = 5;"
     )
     steps = [
-        _step(1, head, "Full", full_cmd,
+        _step(1, head["LogID"], head, "Full", full_cmd,
               devices=", ".join(r["physical_device_name"] for r in full_rows))
     ]
-    last_lsn: Decimal = head["last_lsn"]
 
     # ---------------- DIFF (sql:837-1035) ----------------
-    next_id = 2
-    if not head["is_copy_only"]:  # copy-only full ⇒ no diffs apply (sql:837-852)
-        diffs = _rank1_latest(
-            scoped.filter(
-                (F.col("BackupType") == "Diff")
-                & (F.col("last_lsn") > F.lit(last_lsn))
-                & (F.col("backup_start_date") <= F.lit(restore_to_time))
-            )
+    # none after a copy-only full (sql:837-852): the planner returns none
+    diff_rows = sorted(files["Diff"], key=_by_device)
+    if diff_rows:
+        diff_devices = ", \n".join(_device_clause_py(r) for r in diff_rows)
+        diff_cmd = (
+            f"RESTORE DATABASE [{dest}] FROM \n{diff_devices}"
+            " WITH NORECOVERY,  STATS = 5"
         )
-        diff_rows = diffs.select(*_CHAIN_COLS).orderBy("physical_device_name").collect()
-        if diff_rows:
-            diff_devices = ", \n".join(_device_clause_py(r) for r in diff_rows)
-            diff_cmd = (
-                f"RESTORE DATABASE [{dest}] FROM \n{diff_devices}"
-                " WITH NORECOVERY,  STATS = 5"
-            )
-            steps.append(
-                _step(next_id, diff_rows[0], "Diff", diff_cmd,
-                      devices=diff_rows[0]["physical_device_name"])
-            )
-            next_id += 1
-            last_lsn = diff_rows[0]["last_lsn"]
+        steps.append(
+            _step(2, diff_rows[0]["LogID"], diff_rows[0], "Diff", diff_cmd,
+                  devices=diff_rows[0]["physical_device_name"])
+        )
 
     # ---------------- LOG (sql:1039-1259) ----------------
-    logs_all = scoped.filter(
-        (F.col("BackupType") == "Log") & (F.col("last_lsn") > F.lit(last_lsn))
-    )
-    asof = logs_all.filter(F.col("backup_start_date") <= F.lit(restore_to_time))
-    # tail overlap: ALL stripes of the earliest log after the restore
-    # point (strengthened from the reference's arbitrary top(1) row)
-    after = logs_all.filter(F.col("backup_start_date") > F.lit(restore_to_time))
-    w_first = Window.orderBy(F.col("backup_start_date").asc(), F.col("last_lsn").asc())
-    first_after = (
-        after.withColumn("_r", F.dense_rank().over(w_first)).filter(F.col("_r") == 1).drop("_r")
-    )
-    logs = asof.unionByName(first_after).dropDuplicates(["LogID"])
-
-    # W2 stripe-dedup + A6 collapse: one row per striped log backup with
-    # a combined device clause, FILE = position preserved
-    w2 = Window.partitionBy("first_lsn", "last_lsn")
-    collapsed = (
-        logs.withColumn("LogIDPartitioned", F.min("LogID").over(w2))
-        .groupBy(
-            "LogIDPartitioned",
-            *[c for c in _CHAIN_COLS if c not in ("LogID", "physical_device_name", "device_type")],
-        )
-        .agg(sorted_string_agg(device_clause(), ", \n").alias("devices"))
-        .orderBy(F.col("last_lsn").asc())
-    )
-    log_rows = collapsed.collect()
-    for r in log_rows:
+    for log_id, r, devices in _collapse_logs(files["Log"]):
         cmd = (
-            f"RESTORE LOG [{dest}] FROM {r['devices']} WITH FILE = "
+            f"RESTORE LOG [{dest}] FROM {devices} WITH FILE = "
             f"{r['position']},NORECOVERY, NOUNLOAD, STATS = 10;"
         )
-        steps.append(_step(next_id, r, "Log", cmd, devices=r["devices"],
-                           log_id_key="LogIDPartitioned"))
-        next_id += 1
+        steps.append(_step(len(steps) + 1, log_id, r, "Log", cmd, devices=devices))
 
     # STOPAT on the last two log restores (sql:1261-1273); sqlserver
     # style emits the reference's T-SQL varchar-cast datetime bytes
@@ -367,6 +324,35 @@ def generate_restore_script(
     return RestoreScript(steps=steps, style=style)
 
 
+def _by_device(row: Any) -> tuple[bool, str]:
+    """Device-name order, NULL first (Spark's ascending order)."""
+    name = row["physical_device_name"]
+    return name is not None, name or ""
+
+
+#: A striped Log's stripes agree on every column but these.
+_STRIPE_COLS = ("LogID", "physical_device_name", "device_type")
+
+
+def _collapse_logs(rows: list[Any]) -> list[tuple[int, Any, str]]:
+    """One (history_log_id, row, devices) per striped Log backup, in
+    last_lsn order (W2 + A6): the id is the minimum LogID per
+    (first_lsn, last_lsn), the devices every stripe's clause, sorted."""
+    first_id: dict[tuple, int] = {}
+    for r in rows:
+        k = (r["first_lsn"], r["last_lsn"])
+        first_id[k] = min(first_id.get(k, r["LogID"]), r["LogID"])
+    steps: dict[tuple, tuple[int, Any, list[str]]] = {}
+    for r in rows:
+        log_id = first_id[(r["first_lsn"], r["last_lsn"])]
+        key = (log_id, *(r[c] for c in _CHAIN_COLS if c not in _STRIPE_COLS))
+        _, _, clauses = steps.setdefault(key, (log_id, r, []))
+        if r["physical_device_name"] is not None:
+            clauses.append(_device_clause_py(r))
+    out = [(i, r, ", \n".join(sorted(c))) for i, r, c in steps.values()]
+    return sorted(out, key=lambda s: (s[1]["last_lsn"], s[0]))
+
+
 def _device_clause_py(row: Any) -> str:
     prefix = "URL = N'" if row["device_type"] == 9 else "DISK = N'"
     return f"{prefix}{row['physical_device_name']}'"
@@ -374,15 +360,15 @@ def _device_clause_py(row: Any) -> str:
 
 def _step(
     restore_id: int,
+    history_log_id: int,
     row: Any,
     backup_type: str,
     command: str,
     devices: str | None,
-    log_id_key: str = "LogID",
 ) -> RestoreStep:
     return RestoreStep(
         restore_id=restore_id,
-        history_log_id=row[log_id_key],
+        history_log_id=history_log_id,
         database_name=row["database_name"],
         backup_type=backup_type,
         backup_start_date=row["backup_start_date"],

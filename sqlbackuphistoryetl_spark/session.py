@@ -37,6 +37,9 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # SQL text in this package writes escapes such as '\'' and '\s+'
+        # in string literals; Hive-compatible literals would keep them raw
+        .config("spark.sql.parser.escapedStringLiterals", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
